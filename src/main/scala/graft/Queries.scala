@@ -511,6 +511,9 @@ object Queries {
       // unbounded distinct-value set; for unknown domains keep the
       // default data-driven bounds path.
       case Some(w) =>
+        // w <= 0 or NaN would shard every value to NaN/±Inf or reverse the
+        // shard order — silently wrong ranks, so refuse it
+        require(w > 0 && !w.isNaN, s"shardWidth must be positive, got $w")
         // The trailing isNotNull is a semantic no-op (v is non-null, so
         // floor(v / w) is non-null) planted deliberately: the final
         // inner join on (grp, _sh) INFERS isnotnull(_sh) on the window
@@ -2812,7 +2815,7 @@ object Queries {
       // The oracle's product operands are (20,4) x (17,4): exact
       // DECIMAL(37..38,8) in DuckDB (1.0 does not widen a (18,4)x(18,4)
       // multiply and overflows). Spark-side, precision-38 sums would carry
-      // java BigDecimal per row (~3x the primitive cost — CorrProbe), so
+      // java BigDecimal per row (~3x the primitive cost, see Sum128Expression), so
       // the five sums run as graft Sum128 over scale-4 fixed-point longs:
       // qf = round(q*10^4) is exactly the oracle's DECIMAL(_,4) unscaled
       // value for any input with <= 4 true decimal places (both HALF_UP),

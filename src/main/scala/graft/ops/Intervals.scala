@@ -14,15 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Intervals {
 
-  /** Measurement escape for [[graft.tools.ScaleProbe]]'s `markpin` probe
-    * ONLY (pin-vs-recompute A/B on the sharded `marked` timeline):
-    * production code never changes it — the default (pin) is the
-    * measured-cheaper side at every scale probed (SCALE.md markpin row).
-    */
-  private[graft] var pinMarked = true
-  private def maybePin(df: DataFrame): DataFrame =
-    if (pinMarked) Caching.cached(df) else df
-
   /** Merge overlapping-or-touching `[start, end]` intervals per key into
     * maximal islands — the gaps-and-islands coalesce: an interval starts
     * a new island exactly when its start exceeds the running maximum end
@@ -99,7 +90,7 @@ object Intervals {
       // timelines, and a manual all-keys shard was already paying the
       // second window pass this replaces (disk-backed blocks vs a full
       // re-sort — the cheaper side at every scale we measured).
-      val marked = maybePin(TimeShard.joinCarry(sharded, carry, keyCol)
+      val marked = Caching.cached(TimeShard.joinCarry(sharded, carry, keyCol)
         .withColumn("_pm", greatest(
           max(e).over(wLoc.rowsBetween(Window.unboundedPreceding, -1)),
           col("_cm")))

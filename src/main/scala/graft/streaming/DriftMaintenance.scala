@@ -38,7 +38,7 @@ final class DriftMaintenance(dir: String, buckets: Int = 1024,
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     val (applied, cells) = readState()
     if (batchId <= applied) {
-      if (applied - batchId > StreamIngest.replayMargin(batch.sparkSession))
+      if (applied - batchId > StreamIngest.AggReplayMargin)
         throw new IllegalStateException(
           s"drift batchId went backwards: got $batchId but $applied is " +
             "already applied. The streaming checkpoint was likely reset " +

@@ -39,7 +39,7 @@ final class QuantileMaintenance(dir: String, valCol: String, k: Int = 512) {
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     val (applied, state) = readState()
     if (batchId <= applied) {
-      if (applied - batchId > StreamIngest.replayMargin(batch.sparkSession))
+      if (applied - batchId > StreamIngest.AggReplayMargin)
         throw new IllegalStateException(
           s"quantile-sketch batchId went backwards: got $batchId but " +
             s"$applied is already applied. The streaming checkpoint was " +

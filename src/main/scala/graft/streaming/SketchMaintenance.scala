@@ -39,9 +39,9 @@ final class SketchMaintenance(dir: String, keyCol: String,
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     val (applied, counters) = readState()
     if (batchId <= applied) {
-      // same margin semantics (and session-conf override) as the
-      // maintained aggregate — see StreamIngest.AggReplayMargin
-      if (applied - batchId > StreamIngest.replayMargin(batch.sparkSession))
+      // same margin semantics as the maintained aggregate — see
+      // StreamIngest.AggReplayMargin
+      if (applied - batchId > StreamIngest.AggReplayMargin)
         throw new IllegalStateException(
           s"sketch batchId went backwards: got $batchId but $applied is " +
             "already applied. The streaming checkpoint was likely reset " +

@@ -28,17 +28,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *   - '''Object stores (S3A/GCS)''': `rename` is COPY+DELETE — not
   *     atomic, O(data), and a crash mid-rename can leave both halves.
   *     Directory-swap state (the bucketed ingest state, the maintained
-  *     aggregate) must not run against an object store as-is; the
-  *     portable commit there is a CONDITIONAL PUT of a new manifest
-  *     key (S3 `If-None-Match` / GCS `ifGenerationMatch=0` — the
-  *     primitive log-structured table formats build their commit
-  *     protocols on), which [[StreamScd2]]'s marker-file flip already
-  *     approximates: it commits by creating a NEW, never-overwritten
+  *     aggregate, compacted tables) has ONE commit protocol, the
+  *     dst-absent directory rename, so its owners call
+  *     [[requireAtomicDirRename]] before their first swap and refuse
+  *     these schemes loudly rather than corrupt silently. [[StreamScd2]]'s
+  *     marker-file flip commits by creating a NEW, never-overwritten
   *     marker object, so it degrades gracefully where only the sweep
   *     of retired directories loses atomicity (stale data is re-swept,
-  *     never resurrected). The rename-based swaps here deliberately
-  *     target rename-capable filesystems and fail loudly (rename
-  *     returning false throws) rather than corrupting silently.
+  *     never resurrected). Every rename here throws when it returns
+  *     false.
   */
 private[graft] object StateFs {
 
@@ -96,7 +94,7 @@ private[graft] object StateFs {
   /** Fail loudly when `fs` cannot rename directories atomically —
     * called by every directory-swap state owner before its first swap
     * (Hadoop exposes no path capability for rename atomicity, so this
-    * is a scheme judgment; `remedy` names the caller's escape hatch).
+    * is a scheme judgment; `remedy` names what the caller can do instead).
     */
   def requireAtomicDirRename(fs: FileSystem, what: String,
                              remedy: String): Unit = {
@@ -192,94 +190,6 @@ private[graft] object StateFs {
     else {
       val id = ids.max
       Some((id, readBytes(fs, new Path(dir, s"$prefix-$id$suffix"))))
-    }
-  }
-
-  /** The OBJECT-STORE commit path the atomicity boundary above names: a
-    * state root whose live content is resolved through a versioned
-    * MANIFEST file instead of directories renamed into place. Data
-    * directories are written ONCE under deterministic per-batch names
-    * and never moved; the commit is the manifest landing via
-    * [[writeVersioned]] — a hidden tmp write plus a dst-absent rename of
-    * ONE SMALL FILE, which is an atomic metadata op on HDFS/POSIX and a
-    * single-object copy-PUT on S3A/GCS whose destination key appears
-    * atomically (the conditional-put approximation the log-structured
-    * table formats build their commit protocols on). No DIRECTORY is
-    * ever renamed, so the protocol carries no O(data), torn-halves
-    * rename anywhere — ManifestProtocolSpec proves it by running the
-    * whole bucketed ingest on a filesystem whose directory renames
-    * FAIL. (Spark's own task-output commit inside a data-directory
-    * write is the deployment's committer choice — object stores pair
-    * this protocol with a direct/“magic” committer; the manifest layer
-    * adds no renames of its own.)
-    *
-    * The manifest maps logical keys (bucket numbers, `"data"` for a
-    * singleton directory) to root-relative data paths; its version IS
-    * the exactly-once batch marker. Readers take the highest committed
-    * manifest; a crash before the commit leaves only an unreferenced
-    * data directory, swept by [[sweepUnreferenced]] at the next write
-    * (never concurrently with it — single writer, like every maintainer
-    * here).
-    */
-  final class ManifestDir(fs: FileSystem, val root: Path) {
-    private val Prefix = "manifest"
-    private val Suffix = ".tsv"
-
-    /** `(batchId, key -> relative data path)` of the live manifest. */
-    def live(): Option[(Long, Map[String, String])] =
-      readVersioned(fs, root, Prefix, Suffix).map { case (id, bytes) =>
-        val entries = new String(bytes, "UTF-8").split("\n", -1)
-          .filter(_.nonEmpty).map { line =>
-            val Array(k, v) = line.split("\t", 2)
-            k -> v
-          }.toMap
-        (id, entries)
-      }
-
-    /** Absolute path of a manifest entry's data directory. */
-    def dataPath(rel: String): Path = new Path(root, rel)
-
-    /** Commit `entries` as the batch-`batchId` manifest (see class doc
-      * for why this single small-file commit is the portable one).
-      */
-    def commit(batchId: Long, entries: Map[String, String]): Unit = {
-      val sb = new StringBuilder
-      entries.toSeq.sorted.foreach { case (k, v) =>
-        require(!k.contains('\t') && !k.contains('\n') && !v.contains('\n'),
-          s"manifest entry contains a tab/newline: $k -> $v")
-        sb.append(k).append('\t').append(v).append('\n')
-      }
-      writeVersioned(fs, root, Prefix, Suffix, batchId,
-        sb.toString.getBytes("UTF-8"))
-    }
-
-    /** Delete data directories no manifest references any more — crash
-      * orphans (data written, commit never landed) and directories fully
-      * retired by later commits. A top-level directory that is PARTIALLY
-      * referenced (a per-batch write whose untouched sub-directories are
-      * still live) keeps its referenced children; its retired child
-      * directories are dropped. Call BEFORE writing a batch's data dir
-      * (single writer), never after the commit — a concurrent reader of
-      * the just-retired state has the same scheduling caveat as the
-      * rename-based swaps.
-      */
-    def sweepUnreferenced(referenced: Map[String, String]): Unit = {
-      val refs = referenced.values.toSet
-      val tops = refs.map(_.split("/", 2)(0))
-      listNames(fs, root).foreach { n =>
-        val protocolFile = n.startsWith(s"$Prefix-") || n.startsWith(".")
-        if (!protocolFile) {
-          if (!tops.contains(n)) deleteRecursively(fs, new Path(root, n))
-          else if (!refs.contains(n)) {
-            // partially referenced batch dir: drop retired sub-dirs only
-            listNames(fs, new Path(root, n)).foreach { s =>
-              val p = new Path(root, s"$n/$s")
-              if (fs.getFileStatus(p).isDirectory && !refs.contains(s"$n/$s"))
-                deleteRecursively(fs, p)
-            }
-          }
-        }
-      }
     }
   }
 

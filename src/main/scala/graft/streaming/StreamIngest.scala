@@ -53,66 +53,23 @@ final class StreamIngest(
   private val schemaDir = new Path(s"$warehouseDir/_schemas")
   private val aggDir = new Path(s"$warehouseDir/_agg")
 
-  /** Directory-commit protocol (`graft.state.protocol` session conf):
-    * `rename` (default) swaps staged directories into place with
-    * dst-absent renames — atomic on HDFS/POSIX, the right choice
-    * wherever rename is a metadata op; `manifest` never renames a
-    * directory at all — data lands once under per-batch names and a
-    * versioned manifest file names the live content
-    * ([[StateFs.ManifestDir]]) — the object-store posture. The choice is
-    * persisted and guarded like the bucket count: reading rename-layout
-    * state through manifest eyes (or vice versa) would see an EMPTY
-    * warehouse and silently fork it, the exact failure the replay-margin
-    * guards exist to make loud.
+  /** The bucket and agg swaps commit by dst-absent directory rename, which
+    * is only atomic where rename is a metadata op (HDFS/POSIX): refuse
+    * copy-rename object stores up front ([[StateFs]]). A warehouse that
+    * holds the retired manifest layout (`_state_v`/`_agg_v`) would read
+    * here as EMPTY and be forked silently, so it is refused as well.
     */
-  private val protocol: String = {
-    val p = spark.conf.getOption("graft.state.protocol").getOrElse("rename")
-    require(p == "rename" || p == "manifest",
-      s"graft.state.protocol must be 'rename' or 'manifest', got '$p'")
-    p
-  }
-  private def manifestMode = protocol == "manifest"
-  private val versRoot = new Path(s"$warehouseDir/_state_v")
-  private val aggVersRoot = new Path(s"$warehouseDir/_agg_v")
-  private lazy val stateManifest = new StateFs.ManifestDir(fs, versRoot)
-  private lazy val aggManifest = new StateFs.ManifestDir(fs, aggVersRoot)
-
-  private def verifyProtocol(): Unit = {
-    // the rename protocol's whole contract rests on directory rename
-    // being an atomic metadata op; object-store "rename" is a
-    // copy+delete that REPORTS SUCCESS, so refuse up front (r13 review)
-    if (!manifestMode)
-      StateFs.requireAtomicDirRename(fs, "the 'rename' state protocol",
-        "Set graft.state.protocol=manifest (the object-store commit " +
-          "path) for this warehouse.")
-    val marker = new Path(s"$warehouseDir/_state_protocol")
-    if (fs.exists(marker)) {
-      val persisted = StateFs.readString(fs, marker).trim
-      if (persisted != protocol)
+  private def verifyLayout(): Unit = {
+    StateFs.requireAtomicDirRename(fs, "StreamIngest's bucketed state",
+      "Keep the warehouse on HDFS or a POSIX filesystem.")
+    Seq("_state_v", "_agg_v").map(n => new Path(s"$warehouseDir/$n"))
+      .find(fs.exists).foreach { p =>
         throw new IllegalStateException(
-          s"warehouse state at $warehouseDir was committed under the " +
-            s"'$persisted' protocol but graft.state.protocol=$protocol — " +
-            "each protocol is blind to the other's layout, so switching " +
-            "would read the warehouse as EMPTY and fork it. Restore the " +
-            "original setting or rebuild the warehouse.")
-    } else {
-      // pre-marker warehouses are rename-layout by construction
-      if (protocol != "rename" &&
-          (StateFs.listNames(fs, new Path(stateDir)).exists(_.startsWith("_bucket=")) ||
-            fs.exists(aggDir)))
-        throw new IllegalStateException(
-          s"warehouse state at $warehouseDir predates the protocol marker " +
-            "and is rename-layout; it cannot be read under " +
-            "graft.state.protocol=manifest. Unset the protocol or rebuild " +
-            "the warehouse.")
-      // staged write + dst-absent rename: a torn overwrite-write here (a
-      // crash during first construction) would leave a marker matching
-      // NEITHER protocol and permanently fail every later start (r13
-      // review); the rename commits the marker whole or not at all
-      val tmp = new Path(s"$warehouseDir/._state_protocol.tmp")
-      StateFs.writeString(fs, tmp, protocol)
-      StateFs.renameInto(fs, tmp, marker)
-    }
+          s"warehouse state at $warehouseDir holds $p, the manifest-protocol " +
+            "layout that graft no longer reads — opening it would see an " +
+            "EMPTY warehouse and fork it. Rebuild the warehouse from its " +
+            "change feed.")
+      }
   }
 
   /** Frozen per-docType schemas, persisted as the donor document JSON so a
@@ -120,7 +77,7 @@ final class StreamIngest(
     */
   private val schemas = scala.collection.mutable.LinkedHashMap.empty[String, DocSchema]
   loadSchemas()
-  verifyProtocol()
+  verifyLayout()
   recoverState()
   verifyBucketCount()
   bootstrapAggIfNeeded()
@@ -209,7 +166,7 @@ final class StreamIngest(
       try {
         // agg BEFORE state (see updateAgg's exactly-once argument)
         maintainAgg.foreach(updateAgg(_, batch, touched, state, batchId))
-        writeBuckets(state, batchId)
+        writeBuckets(state)
       } finally if (maintainAgg.isDefined) { state.unpersist(); () }
 
       publishWith(Some(batch))
@@ -247,7 +204,7 @@ final class StreamIngest(
       // against an existing warehouse (batchIds restart at 0): skipping
       // would silently freeze the aggregate while state keeps advancing, so
       // fail loudly and point at the re-bootstrap path instead.
-      val margin = StreamIngest.replayMargin(spark)
+      val margin = StreamIngest.AggReplayMargin
       if (applied - batchId > margin)
         throw new IllegalStateException(
           s"maintained-aggregate batchId went backwards: got $batchId but " +
@@ -274,48 +231,32 @@ final class StreamIngest(
     commitAgg(merged, batchId)
   }
 
-  /** Land `merged` as the live aggregate for `batchId`. Rename protocol:
-    * data + marker staged together, swapped in as ONE directory rename.
-    * Manifest protocol: data lands ONCE under a fresh name (never a name
-    * a live manifest references — a replayed commit must not overwrite
-    * the directory readers are on), then the versioned manifest commit
-    * makes it live; the manifest version IS the batch marker.
+  /** Land `merged` as the live aggregate for `batchId`: data + marker
+    * staged together, swapped in as ONE directory rename.
     */
-  private def commitAgg(merged: DataFrame, batchId: Long): Unit =
-    if (manifestMode) {
-      val liveMap = aggManifest.live().map(_._2).getOrElse(Map.empty)
-      aggManifest.sweepUnreferenced(liveMap)
-      val dirName = s"a$batchId-${System.nanoTime()}"
-      merged.coalesce(1).write.parquet(aggManifest.dataPath(dirName).toString)
-      aggManifest.commit(batchId, Map("data" -> dirName))
-    } else {
-      val staging = new Path(s"$warehouseDir/_agg_staging")
-      val retired = new Path(s"$warehouseDir/._agg.old")
-      deleteRecursively(staging)
-      deleteRecursively(retired)
-      merged.coalesce(1).write.parquet(new Path(staging, "data").toString)
-      StateFs.writeString(fs, new Path(staging, "batchid"), batchId.toString)
-      if (fs.exists(aggDir))
-        StateFs.renameInto(fs, aggDir, retired)
-      StateFs.renameInto(fs, staging, aggDir)
-      deleteRecursively(retired)
-    }
+  private def commitAgg(merged: DataFrame, batchId: Long): Unit = {
+    val staging = new Path(s"$warehouseDir/_agg_staging")
+    val retired = new Path(s"$warehouseDir/._agg.old")
+    deleteRecursively(staging)
+    deleteRecursively(retired)
+    merged.coalesce(1).write.parquet(new Path(staging, "data").toString)
+    StateFs.writeString(fs, new Path(staging, "batchid"), batchId.toString)
+    if (fs.exists(aggDir))
+      StateFs.renameInto(fs, aggDir, retired)
+    StateFs.renameInto(fs, staging, aggDir)
+    deleteRecursively(retired)
+  }
 
-  /** The live aggregate's raw data, protocol-resolved. */
+  /** The live aggregate's raw data. */
   private def aggData(): Option[DataFrame] =
-    if (manifestMode)
-      aggManifest.live().flatMap(_._2.get("data")).map(rel =>
-        spark.read.parquet(aggManifest.dataPath(rel).toString))
-    else if (fs.exists(new Path(aggDir, "data")))
+    if (fs.exists(new Path(aggDir, "data")))
       Some(spark.read.parquet(new Path(aggDir, "data").toString))
     else None
 
-  private def appliedAggBatch(): Long =
-    if (manifestMode) aggManifest.live().map(_._1).getOrElse(-1L)
-    else {
-      val f = new Path(aggDir, "batchid")
-      if (fs.exists(f)) StateFs.readString(fs, f).trim.toLong else -1L
-    }
+  private def appliedAggBatch(): Long = {
+    val f = new Path(aggDir, "batchid")
+    if (fs.exists(f)) StateFs.readString(fs, f).trim.toLong else -1L
+  }
 
   /** The live `(grp, value)` rows a maintained aggregate is built from. */
   private def aggRows(spec: StreamIngest.AggSpec, df: DataFrame): DataFrame =
@@ -329,22 +270,12 @@ final class StreamIngest(
     * would never be counted. One-off bootstrap: recompute the aggregate
     * from the live state ([[IncrementalAgg.recompute]]) and land it with
     * marker batchId -1, so every subsequent micro-batch applies on top.
-    * Runs once (aggDir existing skips it); the staging+atomic-move swap is
-    * the same crash-safe path [[updateAgg]] uses.
+    * Runs once (aggDir existing skips it) and lands through [[commitAgg]],
+    * the same crash-safe swap [[updateAgg]] uses.
     */
   private def bootstrapAggIfNeeded(): Unit = maintainAgg.foreach { spec =>
-    val aggAbsent =
-      if (manifestMode) aggManifest.live().isEmpty else !fs.exists(aggDir)
-    if (aggAbsent) existingState().foreach { st =>
-      val agg = IncrementalAgg.recompute(aggRows(spec, st), "grp", "value")
-      if (manifestMode) commitAgg(agg, -1L)
-      else {
-        val staging = new Path(s"$warehouseDir/_agg_staging")
-        deleteRecursively(staging)
-        agg.coalesce(1).write.parquet(new Path(staging, "data").toString)
-        StateFs.writeString(fs, new Path(staging, "batchid"), "-1")
-        StateFs.renameInto(fs, staging, aggDir)
-      }
+    if (!fs.exists(aggDir)) existingState().foreach { st =>
+      commitAgg(IncrementalAgg.recompute(aggRows(spec, st), "grp", "value"), -1L)
     }
   }
 
@@ -374,69 +305,29 @@ final class StreamIngest(
     * [[recoverState]] restores it on the next start, and the LWW merge is
     * replay-idempotent on top of that.
     */
-  private def writeBuckets(state: DataFrame, batchId: Long): Unit =
-    if (manifestMode) {
-      val live = stateManifest.live()
-      val applied = live.map(_._1).getOrElse(-1L)
-      // a REPLAYED batch (at-least-once delivery after a crash between
-      // the manifest commit and the stream's offset commit) finds its
-      // own version already live: the committed state ALREADY reflects
-      // it (the LWW merge is deterministic), so skip — the exactly-once
-      // twin of updateAgg's marker skip. Re-committing would delete and
-      // re-point the one manifest readers are on for no new content. A
-      // batchId further back than the replay margin is a RESET streaming
-      // checkpoint whose low ids carry genuinely NEW changes — skipping
-      // those would silently drop data, so fail loudly like the agg.
-      if (batchId <= applied) {
-        if (applied - batchId > StreamIngest.replayMargin(spark))
-          throw new IllegalStateException(
-            s"state batchId went backwards: got $batchId but $applied is " +
-              "already committed. The streaming checkpoint was likely " +
-              s"reset against an existing warehouse. Delete $versRoot to " +
-              "rebuild from the stream, or restore the original " +
-              "checkpointLocation.")
-      } else {
-        // data lands ONCE under a fresh per-batch name — never a name a
-        // manifest has referenced — then the versioned manifest names
-        // the live buckets: untouched entries carry forward, touched
-        // ones point into the new batch dir. Crash before the commit:
-        // the orphan dir is swept here on the next attempt. No
-        // directory is ever renamed.
-        val liveMap = live.map(_._2).getOrElse(Map.empty)
-        stateManifest.sweepUnreferenced(liveMap)
-        val dirName = s"b$batchId-${System.nanoTime()}"
-        state.write.mode("overwrite").partitionBy("_bucket")
-          .parquet(stateManifest.dataPath(dirName).toString)
-        if (!fs.exists(bucketMeta))
-          StateFs.writeString(fs, bucketMeta, stateBuckets.toString)
-        val touchedKeys = StateFs.listNames(fs, stateManifest.dataPath(dirName))
-          .filter(_.startsWith("_bucket="))
-          .map(n => n.stripPrefix("_bucket=") -> s"$dirName/$n")
-        stateManifest.commit(batchId, liveMap ++ touchedKeys)
+  private def writeBuckets(state: DataFrame): Unit = {
+    val root = new Path(stateDir)
+    val staging = new Path(s"$warehouseDir/_state_staging")
+    deleteRecursively(staging)
+    state.write.mode("overwrite").partitionBy("_bucket").parquet(staging.toString)
+    fs.mkdirs(root)
+    if (!fs.exists(bucketMeta))
+      StateFs.writeString(fs, bucketMeta, stateBuckets.toString)
+    StateFs.listNames(fs, staging).foreach { name =>
+      if (name.startsWith("_bucket=")) {
+        // the retired name starts with '.', so Spark's file listing never
+        // picks it up even if a crash strands it
+        val target = new Path(root, name)
+        val retired = new Path(root, s".$name.old")
+        deleteRecursively(retired)
+        if (fs.exists(target))
+          StateFs.renameInto(fs, target, retired)
+        StateFs.renameInto(fs, new Path(staging, name), target)
+        deleteRecursively(retired)
       }
-    } else {
-      val root = new Path(stateDir)
-      val staging = new Path(s"$warehouseDir/_state_staging")
-      deleteRecursively(staging)
-      state.write.mode("overwrite").partitionBy("_bucket").parquet(staging.toString)
-      fs.mkdirs(root)
-      if (!fs.exists(bucketMeta))
-        StateFs.writeString(fs, bucketMeta, stateBuckets.toString)
-      StateFs.listNames(fs, staging).foreach { name =>
-        if (name.startsWith("_bucket=")) {
-          // the retired name starts with '.', so Spark's file listing never
-          // picks it up even if a crash strands it
-          val target = new Path(root, name)
-          val retired = new Path(root, s".$name.old")
-          deleteRecursively(retired)
-          if (fs.exists(target))
-            StateFs.renameInto(fs, target, retired)
-          StateFs.renameInto(fs, new Path(staging, name), target)
-          deleteRecursively(retired)
-        }
-      }
-      deleteRecursively(staging)
     }
+    deleteRecursively(staging)
+  }
 
   /** Crash recovery for [[writeBuckets]]: a retired bucket whose
     * replacement never landed is moved back; leftover retired/staging
@@ -470,53 +361,19 @@ final class StreamIngest(
     * bucket check (not a bare directory-exists) keeps an all-filtered
     * first batch — which creates the state root but moves no buckets —
     * from poisoning every later read with an unreadable empty directory.
-    * Manifest protocol: the live manifest names each bucket's directory;
-    * the partition column rides back as a literal per bucket read.
     */
-  private def existingState(): Option[DataFrame] =
-    if (manifestMode) readManifestBuckets(None)
-    else {
-      val hasBuckets =
-        StateFs.listNames(fs, new Path(stateDir)).exists(_.startsWith("_bucket="))
-      if (hasBuckets) Some(spark.read.parquet(stateDir)) else None
-    }
+  private def existingState(): Option[DataFrame] = {
+    val hasBuckets =
+      StateFs.listNames(fs, new Path(stateDir)).exists(_.startsWith("_bucket="))
+    if (hasBuckets) Some(spark.read.parquet(stateDir)) else None
+  }
 
-  /** State rows of the `touched` buckets only — None when none of them
-    * (or no state at all) exists yet. Rename protocol reads the full
-    * partitioned table and prunes; manifest protocol opens ONLY the
-    * touched buckets' directories (no post-scan filter at all).
+  /** State rows of the `touched` buckets only — None when no state exists
+    * yet. Reads the partitioned table and prunes to the touched buckets.
     */
   private def existingStateTouched(touched: Array[Int]): Option[DataFrame] =
-    if (manifestMode) readManifestBuckets(Some(touched.toSet))
-    else existingState().map(
+    existingState().map(
       _.where(col("_bucket").isin(touched.map(Integer.valueOf).toIndexedSeq: _*)))
-
-  /** Plan shape: ONE parquet relation per referenced BATCH DIRECTORY
-    * (all of a dir's live buckets ride one multi-path scan, `basePath`
-    * partition inference restoring `_bucket`), so the union width is
-    * the number of batch dirs the manifest still references — the
-    * recent-batch handful under any touch pattern with locality, and at
-    * worst `graft.state.buckets` when every bucket's last touch was a
-    * different batch. Size bucket counts with that worst case in mind
-    * (the default 64 is a 64-way union; thousands are fine, hundreds of
-    * thousands are not — at which point a periodic full-touch batch, a
-    * backfill re-writing every id, collapses the manifest to one dir).
-    */
-  private def readManifestBuckets(touched: Option[Set[Int]]): Option[DataFrame] = {
-    val parts = stateManifest.live().map(_._2).getOrElse(Map.empty)
-      .toSeq.map { case (k, rel) => k.toInt -> rel }
-      .filter { case (b, _) => touched.forall(_.contains(b)) }
-    if (parts.isEmpty) None
-    else {
-      val byDir = parts.groupBy(_._2.split("/", 2)(0))
-      Some(byDir.toSeq.sortBy(_._1).map { case (dirName, entries) =>
-        spark.read
-          .option("basePath", stateManifest.dataPath(dirName).toString)
-          .parquet(entries.map(e => stateManifest.dataPath(e._2).toString)
-            .sorted: _*)
-      }.reduce(_ unionByName _))
-    }
-  }
 
   /** docTypes ever published, cached so the per-batch path never rescans
     * the full state (None until the first publish seeds it — from state
@@ -611,20 +468,9 @@ object StreamIngest {
     * itself (the crash window between the agg swap and the offset
     * commit), so any batchId strictly below the marker is a reset
     * checkpoint and must fail loudly rather than silently drop its
-    * delta. A deployment that enables
-    * `spark.sql.streaming.asyncProgressTracking` (which can re-deliver
-    * several batches back whose deltas were already absorbed) must widen
-    * this via the `graft.agg.replayMargin` session conf to its async
-    * checkpointing interval in batches.
+    * delta.
     */
   val AggReplayMargin: Long = 0L
-
-  /** The effective margin: [[AggReplayMargin]] unless overridden by the
-    * `graft.agg.replayMargin` session conf (see above).
-    */
-  def replayMargin(spark: SparkSession): Long =
-    spark.conf.getOption("graft.agg.replayMargin").map(_.toLong)
-      .getOrElse(AggReplayMargin)
 
   /** Recursive delete over LOCAL java.nio paths (no-op when absent) —
     * only the CLI `--reset` still uses it (its target is the launching

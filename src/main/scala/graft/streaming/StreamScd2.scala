@@ -147,7 +147,7 @@ final class StreamScd2(
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     val applied = appliedBatch()
     if (batchId <= applied) {
-      val margin = StreamIngest.replayMargin(spark)
+      val margin = StreamIngest.AggReplayMargin
       if (applied - batchId > margin)
         throw new IllegalStateException(
           s"dimension batchId went backwards: got $batchId but $applied is " +

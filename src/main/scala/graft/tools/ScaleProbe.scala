@@ -36,7 +36,6 @@ object ScaleProbe {
     if (mode == "stats" || mode == "all") statsProbe(spark)
     if (mode == "asof" || mode == "all") asofProbe(spark)
     if (mode == "intervals" || mode == "all") intervalsProbe(spark)
-    if (mode == "markpin" || mode == "all") markPinProbe(spark)
     if (mode == "sessions" || mode == "all") sessionsProbe(spark)
     if (mode == "auto" || mode == "all") autoProbe(spark)
     if (mode == "carry" || mode == "all") carryProbe(spark)
@@ -470,77 +469,6 @@ object ScaleProbe {
         println(f"INTERVALS $label%-16s wall=$wall%6.2fs maxTask=$maxTask%6.2fs fp=$fp")
       }
     } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  /** Pin-vs-recompute A/B for the sharded coalesce's `marked` timeline
-    * (VERDICT r13 item 8): a manual ALL-KEYS 32-shard run over the
-    * intervals plant (10× events + a 4M-interval bot) materializes the
-    * full event timeline to executor storage when pinned, or re-runs the
-    * carry-join + running-max window chain once per consumer when not.
-    * Reports wall, max single task, and the result fingerprint for both
-    * sides so the boundary lands in SCALE.md.
-    */
-  private def markPinProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
-    val ev10 = (0 until 10).map(i =>
-      base.select(
-        (col("event_id") + lit(i.toLong * 100000000L)).as("event_id"),
-        (col("user_id") + lit(i.toLong * 1000000L)).as("user_id"),
-        col("ts")))
-      .reduce(_ unionByName _)
-    val t0ns = 1704067200000000000L
-    val hot = spark.range(4000000).select(
-      (col("id") + 900000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
-      (lit(t0ns) + col("id") * 5000000000L).as("ts"))
-    val out = "/tmp/graft-scale-markpin"
-    ev10.unionByName(hot)
-      .select(col("user_id"), col("event_id"), col("ts").as("s"),
-        (col("ts") + 1800000000000L).as("e"))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$out/iv.parquet")
-    val iv = spark.read.parquet(s"$out/iv.parquet")
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-      }
-      for (pin <- Seq(true, false)) {
-        graft.ops.Intervals.pinMarked = pin
-        def run() = graft.ops.Intervals
-          .coalesce(iv, "user_id", "s", "e", "event_id", timeShards = 32)
-          .write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache()
-        run() // warm
-        val (wall, maxTask) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          run()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        spark.catalog.clearCache()
-        val fp = graft.ops.Intervals
-          .coalesce(iv, "user_id", "s", "e", "event_id", timeShards = 32)
-          .agg(sum(expr("island + s % 1000000007 + e % 1000000007 + n_rows")).as("fp"))
-          .collect()(0).getLong(0)
-        println(f"MARKPIN pin=$pin%-5s wall=$wall%6.2fs maxTask=$maxTask%6.2fs fp=$fp")
-      }
-    } finally {
-      graft.ops.Intervals.pinMarked = true
-      spark.sparkContext.removeSparkListener(listener)
-    }
   }
 
   /** Gap sessionization under a planted bot user: one user holding 4M

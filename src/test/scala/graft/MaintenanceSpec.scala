@@ -39,6 +39,18 @@ class MaintenanceSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 100)
   }
 
+  test("compactFiles refuses copy-rename object stores before any IO") {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.s3a.impl", classOf[FakeS3aFileSystem].getName)
+    // the two-rename swap has the object-store boundary of StreamIngest's
+    // bucket swaps, checked before the table is touched
+    val e = intercept[IllegalArgumentException] {
+      Maintenance.compactFiles(spark,
+        "s3a://" + Files.createTempDirectory("s3a-tbl").resolve("t").toString)
+    }
+    assert(e.getMessage.contains("copy+delete"))
+  }
+
   test("zOrderKey interleaves bits as a Morton code") {
     val rows = Seq((0L, 0L), (1L, 0L), (0L, 1L), (1L, 1L), (3L, 3L), (2L, 1L))
       .toDF("x", "y")

@@ -137,6 +137,16 @@ class MedianHistogramSpec extends SparkSpec {
     }
   }
 
+  test("a non-positive or NaN fixed shard width is refused") {
+    val hist = Seq(("g", 1.0, 1L), ("g", 2.0, 1L)).toDF("g", "v", "c")
+    for (w <- Seq(0.0, -1.0, Double.NaN)) {
+      val e = intercept[IllegalArgumentException] {
+        Queries.shardedCum(hist, "g", "v", "c", Some(w))
+      }
+      assert(e.getMessage.contains("shardWidth must be positive"), s"width $w")
+    }
+  }
+
   test("q_median is exact with negative values under the fixed-width shard") {
     // floor(v / w) yields NEGATIVE shard ids for negative values — the
     // offset window must still order shards correctly.

@@ -293,4 +293,29 @@ class StreamIngestSpec extends SparkSpec {
       assert(e.getMessage.contains("bucket"))
     } finally spark.conf.unset("graft.state.buckets")
   }
+
+  test("a warehouse in the retired manifest layout fails to open, not reads empty") {
+    for (layout <- Seq("_state_v", "_agg_v")) {
+      val wh = tempDir("manifest-wh")
+      Files.createDirectories(Paths.get(wh, layout, "b0-1", "_bucket=0"))
+      val e = intercept[IllegalStateException] {
+        new StreamIngest(spark, WarehouseOptions(database = "mfdb"), wh)
+      }
+      assert(e.getMessage.contains(layout) &&
+        e.getMessage.contains("manifest-protocol layout") &&
+        e.getMessage.contains("Rebuild the warehouse"), e.getMessage)
+    }
+  }
+
+  test("copy-rename object stores are refused at construction") {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.s3a.impl", classOf[FakeS3aFileSystem].getName)
+    // S3A's rename is a copy+delete that REPORTS SUCCESS, so nothing
+    // downstream of a mid-swap crash would ever fail
+    val e = intercept[IllegalArgumentException] {
+      new StreamIngest(spark, WarehouseOptions(database = "s3db"),
+        "s3a://" + tempDir("s3a-wh"))
+    }
+    assert(e.getMessage.contains("copy+delete"))
+  }
 }
